@@ -3,13 +3,14 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-/** Optimization-round helper (guide §1): times SparkEntry queries under
+/** The engine's one profiling main: times SparkEntry queries under
   * EXACTLY Bench part 2's methodology — same session config (extensions,
   * shuffle partitions, /dev/shm spill), same untimed generic warmup, same
   * full-column checksum action — but without the ~26-minute scaling-probe
-  * part 1, and with repetitions + optional plan dumps for iteration.
-  * Bench.scala itself is frozen for measurement; numbers cited in
-  * OPTIMIZATION_r06.md marked "BenchExtra" come from here.
+  * part 1, and with repetitions + optional formatted-plan dumps. Each
+  * query runs under its name as the Spark job description. Bench.scala
+  * itself is frozen for measurement; numbers cited in OPTIMIZATION_r06.md
+  * marked "BenchExtra" come from here.
   *
   * Usage: runMain graft.BenchExtra <sfDir> <reps> [queryName...]
   *   (no names = full sweep, Bench order).

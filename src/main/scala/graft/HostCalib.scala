@@ -1,15 +1,12 @@
 package graft
 
-/** Host ceiling calibration (no Spark): measures how this box's raw
-  * compute and memory-copy throughput scale with thread count, to anchor
-  * the scaling-probe analysis in BASELINE.md. Spark operators live between
-  * the two curves: whole-stage-codegen'd expression work tracks `compute`;
-  * shuffle/sort/WindowExec row traffic tracks `copy` (all threads share
-  * one memory bus on this VM).
-  *
-  * Prints one line per (job, threads): aggregate throughput, plus the
-  * N→4N efficiency pairs (2→8, 8→32) per job. Each thread does identical
-  * independent work; efficiency = thr(4N) / (4 × thr(N)).
+/** Host ceiling gauges (no Spark) for the scaling probe: how this box's
+  * raw compute and memory-copy throughput scale with thread count. Spark
+  * operators live between the two curves: whole-stage-codegen'd
+  * expression work tracks `compute`; shuffle/sort/WindowExec row traffic
+  * tracks `copy` (all threads share one memory bus on this VM). Each
+  * thread does identical independent work; efficiency = thr(4N) /
+  * (4 × thr(N)).
   */
 object HostCalib {
 
@@ -87,7 +84,6 @@ object HostCalib {
     * "copy") at the given thread pair — the per-run calibration the
     * scaling probe ships inside its JSON (VERDICT r2 #1: emit the ceiling
     * next to the measured efficiency instead of pointing at BASELINE.md).
-    * Smaller work sizes than [[main]] (seconds, not minutes); same curves.
     */
   def pairEfficiency(job: String, nSmall: Int, nBig: Int): Double = {
     val computeIters = 300000000L
@@ -101,25 +97,5 @@ object HostCalib {
     val thrS = throughput(nSmall, unitOps)(work())
     val thrB = throughput(nBig, unitOps)(work())
     thrB / ((nBig.toDouble / nSmall) * thrS)
-  }
-
-  def main(args: Array[String]): Unit = {
-    val threads = Seq(2, 8, 32)
-    val computeIters = 600000000L
-    val copyReps = 40
-    val copyWords = 32 << 20 // 256 MiB per buffer, 2 buffers per thread
-    def run(name: String, unitOps: Double)(work: => Long): Map[Int, Double] = {
-      // warmup (JIT) then measure, low->high thread counts
-      throughput(2, unitOps)(work)
-      threads.map { n =>
-        val thr = throughput(n, unitOps)(work)
-        println(f"CALIB job=$name threads=$n aggregate_ops_per_sec=$thr%.3e")
-        n -> thr
-      }.toMap
-    }
-    val comp = run("compute", computeIters.toDouble)(computeWork(computeIters))
-    val copy = run("copy", 2.0 * copyReps * copyWords * 8)(copyWork(copyReps, copyWords))
-    for ((name, m) <- Seq("compute" -> comp, "copy" -> copy); (a, b) <- Seq((2, 8), (8, 32)))
-      println(f"CALIB job=$name pair=${a}->${b} efficiency=${m(b) / (4.0 * m(a))}%.3f")
   }
 }

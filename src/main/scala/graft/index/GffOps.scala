@@ -45,12 +45,6 @@ object GffOps {
       Seq("id"), "left_anti")
   }
 
-  /** search --exact: attr values -> aids (M4 set membership over the
-    * dictionary) -> fids (J5 inverted equi-join) -> group rows.
-    */
-  def searchExact(t: IndexTables, values: Seq[String], types: Seq[String] = Nil): DataFrame =
-    searchByAids(t, t.attrDict.where(col("attr").isin(values: _*)), types)
-
   /** search --regex: any-of regexes over the attr dictionary (M3). Running
     * the regex on the DICTIONARY (small) instead of the fact table is the
     * reference's trick (search.rs:92-103) — dictionary size, not corpus

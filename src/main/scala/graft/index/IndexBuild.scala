@@ -32,7 +32,6 @@ object IndexBuild {
 
   /** Build all index tables from a parsed GFF DataFrame (GffSource.parse). */
   def build(parsed: DataFrame): IndexTables = {
-    val spark = parsed.sparkSession
     // stage 0: materialize the parse ONCE. Without this the parse plan
     // (text split + regex extraction — the widest expressions in the whole
     // engine) executes three times before stage 1 completes: the range

@@ -91,8 +91,7 @@ object Dedup {
     * Hot-bucket cap (`maxBucket`): a band value shared by more docs is
     * non-discriminative (near-universal shingles — empty/boilerplate docs)
     * and would make one reducer O(b^2); such buckets are dropped
-    * DETERMINISTICALLY — same rule on the oracle side — and are auditable
-    * via [[droppedBands]], not silently vanished.
+    * DETERMINISTICALLY — same rule on the oracle side.
     */
   def minHashLshPairs(df: DataFrame, idCol: String, textCol: String,
       shingleN: Int = 5, k: Int = 8, r: Int = 2, maxBucket: Int = 128): DataFrame = {
@@ -106,15 +105,6 @@ object Dedup {
       .select(col(s"a.$idCol").as("da"), col(s"b.$idCol").as("db"))
       .distinct()
   }
-
-  /** Audit table for the [[minHashLshPairs]] bucket cap: every dropped
-    * band bucket with its population (no silent truncation).
-    */
-  def droppedBands(df: DataFrame, idCol: String, textCol: String,
-      shingleN: Int = 5, k: Int = 8, r: Int = 2, maxBucket: Int = 128): DataFrame =
-    bandTable(df, idCol, textCol, shingleN, k, r)
-      .groupBy(col("j"), col("b")).agg(count(lit(1)).as("n_docs"))
-      .where(col("n_docs") > maxBucket)
 
   /** SimHash: `bits`-bit signature; bit j votes +1/-1 per word occurrence
     * from bit (j%4) of hex digit (j/4+1) of the word's md5. Near-dup docs

@@ -1,17 +1,10 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, Encoders, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 /** Multimodal column plumbing: image/audio/video as opaque `binary`
-  * payloads with typed metadata, processed in fixed-size batches through
-  * typed mapPartitions (the Scala analog of `mapInPandas` batch shape).
-  *
-  * The DECODE step is a clearly-marked deterministic STUB — image/audio
-  * codecs are not in this container — but everything Spark-side is real
-  * and tested: schema, batching, partitioning, fixed-length feature
-  * vectors, frame sampling.
+  * payloads with typed metadata, and frame sampling over those payloads.
   */
 object Multimodal {
 
@@ -24,38 +17,6 @@ object Multimodal {
       encode(col(textCol), "UTF-8").as("payload"),
       struct(length(col(textCol)).cast("long").as("n_bytes"),
         lit("text/plain").as("kind")).as("meta"))
-
-  /** STUB decoder: a real implementation would invoke an image/audio codec
-    * here. The deterministic fake emits a 16-bucket byte histogram — same
-    * shape (fixed-length float vector per row) a CNN/fbank featurizer
-    * would produce, so the downstream plumbing is exercised for real.
-    */
-  private def fakeDecode(payload: Array[Byte]): Array[Float] = {
-    val h = new Array[Float](16)
-    var i = 0
-    while (i < payload.length) { h((payload(i) & 0xff) % 16) += 1f; i += 1 }
-    if (payload.length > 0) { var j = 0; while (j < 16) { h(j) /= payload.length; j += 1 } }
-    h
-  }
-
-  /** Batched feature extraction: rows flow through mapPartitions in
-    * `batchSize` groups (≙ Arrow record batches under mapInPandas),
-    * emitting (doc_id, features array<float>, batch_id within partition).
-    */
-  def extractFeatures(bin: DataFrame, batchSize: Int = 256): DataFrame = {
-    val outSchema = StructType(Seq(
-      StructField("doc_id", StringType, nullable = false),
-      StructField("features", ArrayType(FloatType, containsNull = false)),
-      StructField("batch_ordinal", LongType, nullable = false)))
-    bin.select(col("doc_id"), col("payload")).mapPartitions { it =>
-      it.grouped(batchSize).zipWithIndex.flatMap { case (batch, bi) =>
-        // a real decoder would process `batch` as one vectorized call
-        batch.iterator.map { r =>
-          Row(r.getString(0), fakeDecode(r.getAs[Array[Byte]](1)).toSeq, bi.toLong)
-        }
-      }
-    }(Encoders.row(outSchema))
-  }
 
   /** Frame sampling: every `stride`-th byte of the payload (≙ sampling
     * video frames / audio windows), as a bounded-length binary.

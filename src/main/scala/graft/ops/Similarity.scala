@@ -142,7 +142,8 @@ object Similarity {
     // the {0} ∪ single-bit probe-mask set), so each unique pair surfaces
     // exactly once and the distinct exchange disappears. Same pair set:
     // old = pairs with SOME kept colliding band; new emits at the MINIMAL
-    // such band.
+    // such band. The kept mask is a 64-bit shift: an INT shift wraps at
+    // g >= 32 and would alias band g onto band g - 32.
     require(bandBits * nBands <= 60, "packed signature must fit a long")
     val base = withNorm(corpus, embCol)
     val w = (1L << bandBits) - 1
@@ -162,7 +163,7 @@ object Similarity {
       .withColumn("bkt", expr(s"shiftright(__sb, CAST(g * $bandBits AS INT)) & ${w}L"))
       .withColumn("__bn", count(lit(1)).over(Window.partitionBy(col("g"), col("bkt"))))
       .withColumn("__kept", sum(when(col("__bn") <= maxBucket,
-        expr("CAST(shiftleft(1, CAST(g AS INT)) AS BIGINT)")).otherwise(0L)).over(wDb))
+        expr("shiftleft(CAST(1 AS BIGINT), CAST(g AS INT))")).otherwise(0L)).over(wDb))
       .where(col("__bn") <= maxBucket)
       .select(col("db"), col("__sb"), col("__kept"), col("g"), col("bkt"))
     val pairs = a.join(b, Seq("g", "bkt"))
@@ -229,27 +230,6 @@ object Similarity {
       .select("qid", "nid", "rank", "cos")
   }
 
-  /** ANN: top-k cosine within the query's single LSH bucket only (the
-    * sharpest/cheapest variant; see [[cosineKnnLshBanded]] for the
-    * recall-controlled scale path).
-    */
-  def cosineKnnLsh(corpus: DataFrame, idCol: String, embCol: String,
-      queryPred: String, k: Int, bits: Int = 8, dim: Int = 64): DataFrame = {
-    val base = withNorm(corpus, embCol)
-      .withColumn("__bkt", expr(lshBucketExpr(embCol, bits, dim)))
-    val q = base.where(expr(queryPred))
-      .select(col(idCol).as("qid"), col(embCol).as("qe"), col("__n2").as("qn2"),
-        col("__bkt").as("qb"))
-    val n = base.select(col(idCol).as("nid"), col(embCol).as("ne"), col("__n2").as("nn2"),
-      col("__bkt").as("nb"))
-    val scored = q.join(n, col("qb") === col("nb") && col("qid") =!= col("nid"))
-      .withColumn("cos", cosCol)
-    val w = Window.partitionBy(col("qid")).orderBy(col("cos").desc, col("nid"))
-    scored.withColumn("rank", row_number().over(w).cast("long"))
-      .where(col("rank") <= k)
-      .select("qid", "nid", "rank", "cos")
-  }
-
   /** IVF cell assignment: every corpus vector -> the cell of its nearest
     * centroid by cosine (ties -> lowest centroid id). Centroids are the
     * corpus vectors picked by a DETERMINISTIC id rule (every
@@ -273,7 +253,7 @@ object Similarity {
     * Routing is APPROXIMATE in general (the global argmax centroid may
     * live under a different super) — the standard coarse-quantizer trade,
     * compensated at search time by nProbe — and EXACT in the two anchor
-    * cases Round5Spec pins: nSuper == 1 (one super owns every child) and
+    * cases SimilaritySpec pins: nSuper == 1 (one super owns every child) and
     * nSuper == nCells (every centroid is its own super).
     */
   def ivfAssign(corpus: DataFrame, idCol: String, embCol: String,

@@ -41,11 +41,15 @@ object IntervalBinRule extends Rule[LogicalPlan] with PredicateHelper {
     * corpus): 16 entities x ~12 coarse bins left ~3k rows per key on
     * EACH side, ~8x the pair evaluations of the 1024-bin layout.
     * Correctness is width-independent (the emit-once proof holds for any
-    * positive width); only the work shape changes.
+    * positive width); only the work shape changes. A width that is not a
+    * positive integer is rejected: 0 would null every bin and silently
+    * empty the join.
     */
-  def BinSize: Long =
-    try conf.getConfString("spark.graft.intervalBin.size", "8192").toLong
-    catch { case _: NumberFormatException => 8192L }
+  def BinSize: Long = {
+    val v = conf.getConfString("spark.graft.intervalBin.size", "8192")
+    v.trim.toLongOption.filter(_ > 0).getOrElse(throw new IllegalArgumentException(
+      s"spark.graft.intervalBin.size must be a positive integer, got '$v'"))
+  }
 
   private def toLong(e: Expression): Expression =
     if (e.dataType == LongType) e else Cast(e, LongType)

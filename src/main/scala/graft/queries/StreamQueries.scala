@@ -166,8 +166,17 @@ object StreamQueries {
       ev.withColumn("__batch", batch)
         .repartition(col("__batch"))
         .write.partitionBy("__batch").mode("overwrite").parquet(dir)
-      for (sub <- Seq("a", "b", "c"))
-        new java.io.File(s"$dir/__batch=$sub").renameTo(new java.io.File(s"$dir/$sub")): Unit
+      // a batch with no rows writes no partition dir; it still gets its
+      // (empty) directory, and a failed rename must not pass silently
+      for (sub <- Seq("a", "b", "c")) {
+        val src = new java.io.File(s"$dir/__batch=$sub")
+        val dst = new java.io.File(s"$dir/$sub")
+        if (!src.exists()) {
+          if (!dst.isDirectory && !dst.mkdirs())
+            throw new java.io.IOException(s"cannot create empty batch dir $dst")
+        } else if (!src.renameTo(dst))
+          throw new java.io.IOException(s"cannot rename $src to $dst")
+      }
       val now = System.currentTimeMillis()
       for ((sub, off) <- Seq(("a", 180000L), ("c", 120000L), ("b", 60000L))) {
         val fs = new java.io.File(s"$dir/$sub").listFiles()

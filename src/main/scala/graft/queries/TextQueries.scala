@@ -242,10 +242,9 @@ object TextQueries {
 
   // q52 — band-bucket audit for the ANN/near-dup cap: EVERY (table,
   // bucket) population with its drop flag (Similarity.bucketAudit — the
-  // "no silent truncation" companion of q25/q50, like Dedup.droppedBands
-  // for q21). At test scale nothing is dropped (all `dropped = false`);
-  // the oracle proves the POPULATION arithmetic, which is what the cap
-  // fires on.
+  // "no silent truncation" companion of q25/q50). At test scale nothing
+  // is dropped (all `dropped = false`); the oracle proves the POPULATION
+  // arithmetic, which is what the cap fires on.
   val q52: Q = (s, d) =>
     Similarity.bucketAudit(Views.table(s, d, "embeddings"), "vec_id", "embedding",
       AnnBandBits, AnnBands, 64, AnnMaxBucket)

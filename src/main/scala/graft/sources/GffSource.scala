@@ -1,7 +1,6 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** GFF3-style line scan (reference: index_builder/core.rs:54-138) as a
@@ -107,12 +106,6 @@ object GffSource {
   private def nullIfEmpty(c: org.apache.spark.sql.Column) =
     when(length(c) > 0, c)
 
-  /** Parse the attributes column wholesale to a map (alternative to the
-    * 3-column extraction; ≙ GFF3 `key=value;...`).
-    */
-  def attrsAsMap(df: DataFrame): DataFrame =
-    df.withColumn("attr_map", expr("str_to_map(attrs, ';', '=')"))
-
   /** S2 — BED region scan (reference: commands/intersect.rs:201-230):
     * whitespace-split (chrom, start, end), half-open coords as-is, other
     * columns ignored; malformed rows dropped (cast -> null -> filter).
@@ -135,10 +128,6 @@ object GffSource {
     spark.read.text(path)
       .select(trim(col("value")).as("name"))
       .where(length(col("name")) > 0 && !col("name").startsWith("#"))
-
-  /** S6 — attribute-value list file, same shape (search.rs:76-87). */
-  def readValueList(spark: SparkSession, path: String): DataFrame =
-    readNameList(spark, path).withColumnRenamed("name", "attr")
 
   /** S4 — single region literal `chr:start-end` (intersect.rs:172-198). */
   def parseRegion(literal: String): (String, Long, Long) = {

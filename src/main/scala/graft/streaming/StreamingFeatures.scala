@@ -1,8 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 import scala.collection.mutable.ArrayBuffer
 
@@ -35,53 +35,6 @@ object StreamingFeatures {
       .withWatermark("ts", watermark)
       .groupBy(window(col("ts"), window_), col("user_id"))
       .agg(count(lit(1)).as("n"), sum(col("value")).as("vsum"))
-
-  /** Session windows (gap-based) per user — the streaming twin of
-    * WindowFeatures.sessionize.
-    */
-  def sessionWindows(events: DataFrame, gap: String = "30 minutes",
-      watermark: String = "30 minutes"): DataFrame =
-    events
-      .withColumn("ts", col("ts").cast("timestamp"))
-      .withWatermark("ts", watermark)
-      .groupBy(session_window(col("ts"), gap), col("user_id"))
-      .agg(count(lit(1)).as("n_events"), sum(col("value")).as("vsum"))
-
-  /** Micro-batch runner with cross-batch state merge (≙ depth.rs
-    * partial+final merge, 264-290): each micro-batch computes partial
-    * per-user aggregates; `merge` folds them into a global state table.
-    * Used with `maxFilesPerTrigger` to bound batch size like BATCH_SIZE.
-    */
-  def microBatchAggregate(events: DataFrame, stateDir: String): StreamingQuery = {
-    val spark = events.sparkSession
-    events.writeStream
-      .outputMode("update")
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        val partial = batch.groupBy(col("user_id"))
-          .agg(count(lit(1)).as("n"), sum(col("value")).as("vsum"))
-        val merged =
-          if (java.nio.file.Files.exists(java.nio.file.Paths.get(s"$stateDir/state"))) {
-            val prev = batch.sparkSession.read.parquet(s"$stateDir/state")
-            prev.unionByName(partial)
-              .groupBy(col("user_id"))
-              .agg(sum(col("n")).as("n"), sum(col("vsum")).as("vsum"))
-          } else partial
-        merged.write.mode("overwrite").parquet(s"$stateDir/state_next")
-        // atomic-ish swap: state_next -> state
-        val fs = new java.io.File(s"$stateDir/state")
-        if (fs.exists()) { deleteRec(fs) }
-        new java.io.File(s"$stateDir/state_next").renameTo(fs)
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", s"$stateDir/_checkpoint")
-      .start()
-  }
-
-  private def deleteRec(f: java.io.File): Unit = {
-    if (f.isDirectory) f.listFiles().foreach(deleteRec)
-    f.delete()
-  }
 
   /** Streaming point-in-time (as-of) join via custom state
     * (`flatMapGroupsWithState` — SURVEY §2.8 escalation path (c) for

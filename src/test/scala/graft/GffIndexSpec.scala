@@ -1,11 +1,12 @@
 package graft
 
 import graft.index.{GffOps, IndexBuild}
-import graft.ops.{Contained, Overlap}
+import graft.ops.{Closure, Contained, Overlap}
 import graft.sources.GffSource
 import org.apache.spark.sql.functions._
 
 import java.nio.file.Files
+import java.util.regex.Pattern
 
 /** End-to-end index-build + extract/search/intersect over a synthetic GFF
   * fixture, porting the reference's semantics as properties (SURVEY.md §5.3):
@@ -83,7 +84,7 @@ class GffIndexSpec extends SparkSpec {
   }
 
   test("search exact + regex over attr dictionary -> groups") {
-    val exact = GffOps.searchExact(idx, Seq("alpha"))
+    val exact = GffOps.searchRegex(idx, Seq("^alpha$"))
       .select("id").as[String].collect().toSet
     assert(exact == Set("gene1", "rna1", "ex1", "ex2", "gene3"),
       "both groups whose root carries attr=alpha; self-rooted ex4 excluded")
@@ -118,10 +119,11 @@ class GffIndexSpec extends SparkSpec {
     val byFile = GffOps.extract(idx, GffSource.readNameList(spark, s"$listDir/names.txt"))
       .select("id").as[String].collect().toSeq
     assert(byFile == Seq("gene1", "rna1", "ex1", "ex2"), "file list ≡ direct list")
-    val values = GffSource.readValueList(spark, s"$listDir/values.txt")
+    val values = GffSource.readNameList(spark, s"$listDir/values.txt")
       .as[String].collect().toSeq
     assert(values == Seq("alpha"))
-    val viaFile = GffOps.searchExact(idx, values).select("id").as[String].collect().toSet
+    val viaFile = GffOps.searchRegex(idx, values.map(v => "^" + Pattern.quote(v) + "$"))
+      .select("id").as[String].collect().toSet
     assert(viaFile == Set("gene1", "rna1", "ex1", "ex2", "gene3"))
   }
 
@@ -156,5 +158,24 @@ class GffIndexSpec extends SparkSpec {
       .select("id").as[String].collect().toSet
     assert(matchOnly == Set("gene1", "rna1", "ex1"),
       "per-line re-check drops non-overlapping group members (intersect.rs:301-307)")
+  }
+
+  test("resolveRootsReleasable: correct roots, and release() leaves no cached data behind") {
+    // depth-3 chains + a self-root + a dangling parent
+    val edges = (Seq((0L, 0L), (1L, 0L), (2L, 1L), (3L, 2L), (4L, 99L)) ++
+      (10L until 40L).map(i => (i, i - 10)))
+      .toDF("id", "parent")
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val (roots, release) = Closure.resolveRootsReleasable(edges)
+    val m = roots.as[(Long, Long)].collect().toMap
+    assert(m(3L) == 0L && m(2L) == 0L && m(0L) == 0L)
+    assert(m(4L) == 99L, "dangling parent resolves to the pointer itself")
+    assert(m(30L) == 0L || m(30L) == 10L % 10, "chain resolves to its head")
+    val during = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(during.nonEmpty, "the closure rounds should have materialized caches")
+    release()
+    val leaked = spark.sparkContext.getPersistentRDDs.keySet.intersect(during)
+    assert(leaked.isEmpty,
+      s"closure rounds must not leave cached RDDs after release(): $leaked")
   }
 }

@@ -56,6 +56,42 @@ class IntervalBinRuleSpec extends SparkSpec {
     }
   }
 
+  test("bin width that is not a positive integer is rejected with the conf named") {
+    val (a, b) = fixture()
+    a.createOrReplaceTempView("probes_w")
+    b.createOrReplaceTempView("feats_w")
+    val sqlText =
+      """SELECT p.probe_id, f.fid
+        |FROM probes_w p JOIN feats_w f
+        |  ON p.entity = f.entity AND p.start < f.end AND p.end > f.start""".stripMargin
+    val threshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    val width = spark.conf.getOption("spark.graft.intervalBin.size")
+    spark.experimental.extraOptimizations =
+      spark.experimental.extraOptimizations :+ IntervalBinRule
+    try {
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+      for (bad <- Seq("0", "-256", "wide")) {
+        spark.conf.set("spark.graft.intervalBin.size", bad)
+        val e = intercept[Exception](spark.sql(sqlText).collect())
+        val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+          .map(x => String.valueOf(x.getMessage))
+        assert(msgs.exists(_.contains("spark.graft.intervalBin.size")),
+          s"width '$bad' must fail naming the conf; got: $e")
+      }
+      spark.conf.set("spark.graft.intervalBin.size", "512")
+      val ok = spark.sql(sqlText).queryExecution.executedPlan.toString
+      assert(ok.contains("__graft_bin"), "a positive width still rewrites")
+    } finally {
+      width match {
+        case Some(w) => spark.conf.set("spark.graft.intervalBin.size", w)
+        case None => spark.conf.unset("spark.graft.intervalBin.size")
+      }
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
+      spark.experimental.extraOptimizations =
+        spark.experimental.extraOptimizations.filterNot(_ == IntervalBinRule)
+    }
+  }
+
   test("adversarial inputs: nulls, empty/inverted intervals, bin-boundary and multi-bin spans") {
     // every degenerate shape the emit-once proof has to survive:
     //  - start/end exactly on the 8192 bin boundary

@@ -32,24 +32,6 @@ class StreamingMultimodalSpec extends SparkSpec {
     assert(got == exp, "streaming result must equal batch result on the same data")
   }
 
-  test("micro-batch foreachBatch merge == single-pass aggregate (depth.rs batching)") {
-    val dir = Files.createTempDirectory("mb").toString
-    // split events into 4 files to force multiple micro-batches
-    spark.read.parquet(s"$sfDir/events.parquet").repartition(4)
-      .write.parquet(s"$dir/in")
-    val schema = spark.read.parquet(s"$dir/in").schema
-    val sdf = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(s"$dir/in")
-    val q = StreamingFeatures.microBatchAggregate(sdf, s"$dir/state_root")
-    q.awaitTermination()
-    val got = spark.read.parquet(s"$dir/state_root/state")
-      .select("user_id", "n").as[(Long, Long)].collect().toMap
-    val exp = spark.read.parquet(s"$sfDir/events.parquet")
-      .groupBy("user_id").agg(count(lit(1)).as("n"))
-      .as[(Long, Long)].collect().toMap
-    assert(got == exp, "cross-batch merged state must equal one-shot aggregate")
-  }
-
   test("streaming as-of (flatMapGroupsWithState) == batch as-of, across micro-batches") {
     import graft.ops.AsOfJoin
     val feats = Seq(("u1", 10L, 1.0), ("u1", 20L, 2.0), ("u2", 5L, 5.0))
@@ -105,20 +87,6 @@ class StreamingMultimodalSpec extends SparkSpec {
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
     val bin = Multimodal.asBinaryTable(docs)
     assert(bin.schema("payload").dataType.typeName == "binary")
-    val feats = Multimodal.extractFeatures(bin, batchSize = 64)
-    val rows = feats.collect()
-    assert(rows.length == docs.count())
-    assert(rows.forall(_.getAs[scala.collection.Seq[Float]]("features").length == 16))
-    // histogram sums to ~1 (normalized by length)
-    val s = rows.head.getAs[scala.collection.Seq[Float]]("features").sum
-    assert(math.abs(s - 1.0f) < 1e-3)
-    // deterministic across partitionings
-    val a = feats.select("doc_id", "features").collect()
-      .map(r => r.getString(0) -> r.getAs[scala.collection.Seq[Float]](1)).toMap
-    val b = Multimodal.extractFeatures(bin.repartition(7), 64)
-      .select("doc_id", "features").collect()
-      .map(r => r.getString(0) -> r.getAs[scala.collection.Seq[Float]](1)).toMap
-    assert(a == b)
     val fs = Multimodal.frameSample(bin, stride = 16, maxFrames = 8).collect()
     assert(fs.forall(_.getLong(2) <= 8))
   }

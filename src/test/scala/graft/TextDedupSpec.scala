@@ -105,20 +105,6 @@ class TextDedupSpec extends SparkSpec {
     }
   }
 
-  test("LSH knn returns a subset ranking consistent with brute force within bucket") {
-    val vecs = (0 until 200).map { i =>
-      val rnd = new scala.util.Random(i * 7)
-      (i.toLong, Array.fill(64)(rnd.nextFloat()))
-    }
-    val df = vecs.toDF("vec_id", "embedding")
-    val lsh = Similarity.cosineKnnLsh(df, "vec_id", "embedding", "vec_id % 40 = 0", 3, 8, 64)
-      .select("qid", "nid").as[(Long, Long)].collect().toSet
-    val brute = Similarity.cosineKnnBrute(df, "vec_id", "embedding", "vec_id % 40 = 0", 200)
-      .select("qid", "nid").as[(Long, Long)].collect().toSet
-    assert(lsh.subsetOf(brute))
-    assert(lsh.nonEmpty)
-  }
-
   test("quality + langid + fingerprint are deterministic across partitionings") {
     for (op <- Seq[org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame](
         d => TextOps.quality(d), d => TextOps.langId(d), d => TextOps.fingerprint(d))) {

@@ -27,13 +27,22 @@ object GffOps {
     */
   def extract(t: IndexTables, names: DataFrame, types: Seq[String] = Nil): DataFrame = {
     val nm = names.select(trim(col(names.columns.head)).as("id"))
-      .where(length(col("id")) > 0).distinct()
-    val roots = t.features.join(broadcast(nm), Seq("id"), "left_semi")
-      .select(col("root_fid")).distinct()
-    val rows = t.features.join(broadcast(roots), "root_fid")
-    val filtered = if (types.nonEmpty) rows.where(col("ftype").isin(types: _*)) else rows
-    filtered.orderBy(col("line_no"))
+      .where(length(col("id")) > 0)
+    val roots = t.features.join(broadcast(nm), Seq("id"), "left_semi").select(col("root_fid"))
+    typed(groupRows(t, broadcast(roots)), types).orderBy(col("line_no"))
   }
+
+  /** Every feature row of the groups whose root is in `roots`, each ONCE
+    * however often its root repeats there (a left-semi join: no distinct
+    * of the roots, no shuffle for it). Columns as an inner join on
+    * root_fid gives them: root_fid first, then the features' others.
+    */
+  private def groupRows(t: IndexTables, roots: DataFrame): DataFrame =
+    t.features.join(roots, Seq("root_fid"), "left_semi")
+      .select((col("root_fid") +: t.features.columns.filterNot(_ == "root_fid").map(col)): _*)
+
+  private def typed(rows: DataFrame, types: Seq[String]): DataFrame =
+    if (types.nonEmpty) rows.where(col("ftype").isin(types: _*)) else rows
 
   /** Names absent from the index (reference warns + skips,
     * extract.rs:88-111).
@@ -41,8 +50,8 @@ object GffOps {
   def missingNames(t: IndexTables, names: DataFrame): DataFrame = {
     val nm = names.select(trim(col(names.columns.head)).as("id"))
       .where(length(col("id")) > 0).distinct()
-    nm.join(t.features.select("id").where(col("id").isNotNull).distinct(),
-      Seq("id"), "left_anti")
+    // an anti-join ignores duplicates on its right side: no distinct there
+    nm.join(t.features.select("id").where(col("id").isNotNull), Seq("id"), "left_anti")
   }
 
   /** search --regex: any-of regexes over the attr dictionary (M3). Running
@@ -57,10 +66,8 @@ object GffOps {
 
   private def searchByAids(t: IndexTables, aids: DataFrame, types: Seq[String]): DataFrame = {
     val roots = t.features.join(broadcast(aids.select("aid")), Seq("aid"), "left_semi")
-      .select("root_fid").distinct()
-    val rows = t.features.join(broadcast(roots), "root_fid")
-    val filtered = if (types.nonEmpty) rows.where(col("ftype").isin(types: _*)) else rows
-    filtered.orderBy(col("line_no"))
+      .select("root_fid")
+    typed(groupRows(t, broadcast(roots)), types).orderBy(col("line_no"))
   }
 
   /** A1 — per-root bucketing of matched probes (intersect.rs:598-607,
@@ -96,7 +103,7 @@ object GffOps {
       types: Seq[String] = Nil): DataFrame = {
     val probes0 = regions.select(col("entity_id").as("entity"), col("start"), col("end"))
     // the match-only path references the probe side from BOTH interval
-    // joins, and each join's auto-path decision additionally counts it —
+    // joins, and each join's auto-path decision additionally collects it —
     // up to four evaluations of whatever plan produced the regions
     // (measured ~3 s/eval of q35's 6.5 s warm wall clock). Persist once.
     // NOTE (ADVICE r4): Dataset.persist registers the plan in the session
@@ -132,16 +139,16 @@ object GffOps {
       // overlap candidates, kept iff the mode predicate FAILS (invert ^ keep)
       val keep = IntervalJoin.join(probes, ivs, graft.ops.Overlap)
         .where(!IntervalJoin.predicate(mode))
-        .select(col("root_fid")).distinct()
-      t.features.join(keep, "root_fid").orderBy(col("line_no"))
+        .select(col("root_fid"))
+      groupRows(t, keep).orderBy(col("line_no"))
     } else {
-      val hits = IntervalJoin.join(probes, ivs, mode)
-      val roots = hits.select(col("root_fid")).distinct()
+      // the roots are as many as the probes' hits (unbounded for a
+      // BED-sized probe set): no broadcast hint, AQE picks the join
+      val roots = IntervalJoin.join(probes, ivs, mode).select(col("root_fid"))
       // type filter applied BEFORE the re-check join and its fid-dedup
       // shuffle (ftype is functionally dependent on fid, so filtering
       // commutes with the dedup; it cut q35's re-check pair volume ~30x)
-      val rows0 = t.features.join(roots, "root_fid")
-      val rows = if (types.nonEmpty) rows0.where(col("ftype").isin(types: _*)) else rows0
+      val rows = typed(groupRows(t, roots), types)
       val out0 = if (matchOnly || types.nonEmpty) {
         // re-check each line with the SELECTED mode (intersect.rs:500-517,
         // re-check confined to matched blocks) — routed through the

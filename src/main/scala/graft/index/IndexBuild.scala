@@ -1,9 +1,13 @@
 package graft.index
 
-import graft.ops.Closure
+import graft.ops.{BroadcastBuild, Closure}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+
+import java.nio.file.{Files, Paths}
+import scala.concurrent.{Await, ExecutionContext, Future, Promise}
+import scala.concurrent.duration._
 
 /** The index-build job (reference lifecycle §3.1, index_builder/core.rs:41-242)
   * re-expressed as a 5-stage Spark pipeline producing persisted index
@@ -133,8 +137,21 @@ object IndexBuild {
       releaseScratch = () => { parsedC.unpersist(false); feats.unpersist(false); releaseClosure() })
   }
 
+  /** The five persisted tables, in manifest order. */
+  val TableNames: Seq[String] =
+    Seq("features", "entity_dict", "attr_dict", "group_extents", "intervals")
+
+  /** Upper bound on one index write: a write that hangs fails instead. */
+  private val WriteTimeout: FiniteDuration = 1.hour
+
   /** Persist index tables as partitioned parquet + a JSON manifest
     * (≙ writing the sidecars, core.rs:221-236 + tree_io.rs:37-63).
+    *
+    * The first table write that fails cancels the others (one job group)
+    * and its error is rethrown as soon as the cancelled writes have
+    * unwound (at most a minute); writes still running after an hour
+    * (`WriteTimeout`) are cancelled the same way and fail with a
+    * TimeoutException. Either way no manifest is written.
     */
   def write(t: IndexTables, dir: String): Unit = {
     // The five sidecar writes are independent jobs over cached/derived
@@ -144,34 +161,88 @@ object IndexBuild {
     // write instead of the sum. Each thread then counts what it wrote
     // FROM THE LANDED PARQUET footers (metadata-only, no recompute of the
     // serving plans), which also makes the manifest lineage of the output.
-    val tables = Seq(
-      "features" -> t.features, "entity_dict" -> t.entityDict,
-      "attr_dict" -> t.attrDict, "group_extents" -> t.groupExtents,
-      "intervals" -> t.intervals)
-    val spark = t.features.sparkSession
+    val tables = TableNames.zip(Seq(t.features, t.entityDict, t.attrDict,
+      t.groupExtents, t.intervals))
+    val sc = t.features.sparkSession.sparkContext
+    val group = s"graft-index-write-${java.util.UUID.randomUUID()}"
     val pool = java.util.concurrent.Executors.newFixedThreadPool(tables.length)
-    implicit val ec: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.fromExecutorService(pool)
+    implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
     try {
       val futures = tables.map { case (name, df) =>
-        scala.concurrent.Future {
-          spark.sparkContext.setJobDescription(s"index write: $name")
+        Future {
+          sc.setJobGroup(group, s"index write: $name")
           df.write.mode("overwrite").parquet(s"$dir/$name")
-          name -> spark.read.parquet(s"$dir/$name").count()
+          name -> df.sparkSession.read.parquet(s"$dir/$name").count()
         }
       }
-      val counts = futures.map(f =>
-        scala.concurrent.Await.result(f, scala.concurrent.duration.Duration.Inf))
+      // completes with the FIRST failure, or with all counts
+      val firstFailure = Promise[Seq[(String, Long)]]()
+      futures.foreach(_.failed.foreach(firstFailure.tryFailure))
+      val counts =
+        try Await.result(Future.firstCompletedOf(Seq(Future.sequence(futures),
+          firstFailure.future)), WriteTimeout)
+        catch {
+          case e: Throwable =>
+            sc.cancelJobGroupAndFutureJobs(group, s"index write to $dir failed: $e")
+            // the other writes fail fast now; let them unwind so that no
+            // job of this write starts after it has thrown
+            pool.shutdown()
+            pool.awaitTermination(1, java.util.concurrent.TimeUnit.MINUTES)
+            throw e
+        }
       val json = counts.map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}")
-      java.nio.file.Files.write(java.nio.file.Paths.get(s"$dir/manifest.json"),
-        json.getBytes("UTF-8"))
+      Files.write(Paths.get(s"$dir/manifest.json"), json.getBytes("UTF-8"))
     } finally pool.shutdown()
   }
 
-  def load(spark: SparkSession, dir: String): IndexTables = IndexTables(
-    spark.read.parquet(s"$dir/features"),
-    spark.read.parquet(s"$dir/entity_dict"),
-    spark.read.parquet(s"$dir/attr_dict"),
-    spark.read.parquet(s"$dir/group_extents"),
-    spark.read.parquet(s"$dir/intervals"))
+  /** Opens a written index. Fails fast, with an IllegalArgumentException
+    * naming the index dir (and the table), when `manifest.json` is missing
+    * or malformed or a table it lists is absent.
+    *
+    * A dictionary (`entity_dict`, `attr_dict`) of at most
+    * [[BroadcastBuild.MaxRows]] rows by the manifest is read into the
+    * driver once, here, and served as a local relation — the analog of the
+    * reference holding `.sqs`/`.atn` in memory (index_loader/core.rs:19-89):
+    * its lookups and broadcasts scan no file. Larger dictionaries and the
+    * other tables stay parquet-backed.
+    */
+  def load(spark: SparkSession, dir: String): IndexTables = {
+    val counts = readManifest(dir)
+    def table(name: String): DataFrame = {
+      require(Files.isDirectory(Paths.get(s"$dir/$name")),
+        s"index $dir: table '$name' listed in manifest.json is absent")
+      spark.read.parquet(s"$dir/$name")
+    }
+    def dict(name: String): DataFrame = {
+      val df = table(name)
+      if (counts(name) > BroadcastBuild.MaxRows) df
+      else {
+        val rows = df.limit((BroadcastBuild.MaxRows + 1).toInt).collectAsList()
+        require(rows.size == counts(name),
+          s"index $dir: table '$name' has ${rows.size} rows, manifest.json says ${counts(name)}")
+        spark.createDataFrame(rows, df.schema)
+      }
+    }
+    IndexTables(table("features"), dict("entity_dict"), dict("attr_dict"),
+      table("group_extents"), table("intervals"))
+  }
+
+  /** Table name -> row count, for every table in [[TableNames]]. */
+  private def readManifest(dir: String): Map[String, Long] = {
+    val path = Paths.get(s"$dir/manifest.json")
+    require(Files.isRegularFile(path), s"index $dir: manifest.json is missing")
+    val json =
+      try new com.fasterxml.jackson.databind.ObjectMapper().readTree(Files.readAllBytes(path))
+      catch {
+        case e: java.io.IOException =>
+          throw new IllegalArgumentException(
+            s"index $dir: manifest.json is malformed: ${e.getMessage}", e)
+      }
+    TableNames.map { name =>
+      val n = Option(json).flatMap(j => Option(j.get(name)))
+      require(n.exists(v => v.isIntegralNumber && v.asLong >= 0),
+        s"index $dir: manifest.json has no row count for table '$name'")
+      name -> n.get.asLong
+    }.toMap
+  }
 }

@@ -1,6 +1,7 @@
 package graft.ops
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
@@ -51,45 +52,49 @@ object AsOfJoin {
         fVal.map(n => col("__last").getField(n).as(n))): _*)
   }
 
-  /** Hard row cap enforced (by an exact count job) before the broadcast
-    * path collects anything — nothing unbounded ever reaches the driver
-    * (same discipline as IntervalJoin.broadcastImpl).
-    */
-  private val BroadcastMaxRows = 1000000L
-  private val BroadcastMaxPlanBytes = BigInt(256L * 1024 * 1024)
-
-  /** Auto path (same decision shape as IntervalJoin.join): broadcast the
+  /** Auto path (same decision as [[IntervalJoin.join]]): broadcast the
     * feature side iff it is PROVABLY small — plan-statistics prefilter,
-    * then one exact count of the candidate — else the windowed merge. At
-    * 100 TB the feature side blows the stats ceiling and the join stays
-    * windowed (one shuffle, zero driver traffic).
+    * then ONE job that collects at most [[BroadcastBuild.MaxRows]] + 1
+    * feature rows, which become the build side when within the cap — else
+    * the windowed merge. At 100 TB the feature side blows the stats
+    * ceiling and the join stays windowed (one shuffle, zero driver
+    * traffic). The broadcast path has no tiebreak knob, so a requested
+    * `tiebreak` always takes the windowed merge.
     */
   def join(probes: DataFrame, feats: DataFrame, tiebreak: Option[String] = None): DataFrame = {
-    val statsSmall =
-      feats.queryExecution.optimizedPlan.stats.sizeInBytes <= BroadcastMaxPlanBytes
-    // the broadcast path has no tiebreak semantics knob; only take it when
-    // the default (latest by time, any-dup) semantics were requested.
-    // The exact count is computed ONCE and threaded into the guarded impl
-    // (ADVICE r2: the public broadcastPath's require re-ran the count job,
-    // a redundant full scan of the feature side per auto join).
-    if (statsSmall && tiebreak.isEmpty &&
-        feats.limit((BroadcastMaxRows + 1).toInt).count() <= BroadcastMaxRows)
-      broadcastChecked(probes, feats)
-    else windowed(probes, feats, tiebreak)
+    val f = buildSide(feats)
+    val rows =
+      if (tiebreak.isEmpty && BroadcastBuild.planBytes(feats) <= BroadcastBuild.MaxPlanBytes)
+        BroadcastBuild.collect(f)
+      else None
+    rows match {
+      case Some(r) => broadcastChecked(probes, f, r)
+      case None => windowed(probes, feats, tiebreak)
+    }
   }
 
   /** Broadcast binary-search as-of: feature side collected, per-entity
     * time-sorted; each probe binary-searches the greatest t' <= t.
-    * Guarded: refuses a feature side whose exact row count exceeds the
-    * broadcast cap — use [[windowed]] for two big sides.
+    * Guarded: refuses a feature side of more than [[BroadcastBuild.MaxRows]]
+    * rows (found by the single bounded collect that builds it) — use
+    * [[windowed]] for two big sides.
     */
   def broadcastPath(probes: DataFrame, feats: DataFrame): DataFrame = {
-    require(feats.count() <= BroadcastMaxRows,
-      s"as-of feature side exceeds $BroadcastMaxRows rows; use AsOfJoin.windowed")
-    broadcastChecked(probes, feats)
+    val f = buildSide(feats)
+    val rows = BroadcastBuild.collect(f)
+    require(rows.isDefined,
+      s"as-of feature side exceeds ${BroadcastBuild.MaxRows} rows; use AsOfJoin.windowed")
+    broadcastChecked(probes, f, rows.get)
   }
 
-  /** [[broadcastPath]] body, row cap ALREADY verified by the caller.
+  /** The feature side in build layout: entity, t, values... */
+  private def buildSide(feats: DataFrame): DataFrame = {
+    val fVal = feats.columns.filterNot(Set("entity", "t"))
+    feats.select((Seq(col("entity"), col("t")) ++ fVal.map(col)): _*)
+  }
+
+  /** [[broadcastPath]] body over `fRows`, the already collected (and
+    * cap-checked) rows of `f` (see [[buildSide]]).
     *
     * r6: InternalRow end to end, like IntervalJoin.broadcastImpl — the
     * old Encoders.row mapPartitions deserialized every probe row to an
@@ -98,14 +103,11 @@ object AsOfJoin {
     * UnsafeProjection over a JoinedRow; the no-match arm joins an
     * all-null feature row of the same width.
     */
-  private def broadcastChecked(probes: DataFrame, feats: DataFrame): DataFrame = {
-    import org.apache.spark.sql.catalyst.InternalRow
+  private def broadcastChecked(probes: DataFrame, f: DataFrame,
+      fRows: Array[InternalRow]): DataFrame = {
     import org.apache.spark.sql.catalyst.expressions.{BoundReference, GenericInternalRow, JoinedRow, UnsafeProjection}
     val spark = probes.sparkSession
-    val fVal = feats.columns.filterNot(Set("entity", "t"))
-    val f = feats.select((Seq(col("entity"), col("t")) ++ fVal.map(col)): _*)
     val eType = f.schema.fields(0).dataType
-    val fRows: Array[InternalRow] = f.queryExecution.toRdd.map(_.copy()).collect()
     val byEntity: Map[Any, (Array[Long], Array[Int])] =
       fRows.indices.groupBy(i => fRows(i).get(0, eType)).map { case (e, idxs) =>
         val sorted = idxs.sortBy(i => (fRows(i).getLong(1), i.toLong)).toArray

@@ -1,6 +1,7 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
@@ -69,52 +70,31 @@ object IntervalJoin {
         payload.map(col)): _*)
   }
 
-  /** Plan-stats ceiling for considering a side broadcastable, and the hard
-    * row cap actually enforced (by an exact count job) before any
-    * driver-side collect. NOTHING unbounded is ever collected: at 100 TB
-    * both sides blow the stats ceiling and the join stays binned.
-    */
-  private val BroadcastMaxPlanBytes = BigInt(256L * 1024 * 1024)
-  private val BroadcastMaxRows = 1000000L
-
-  private def planBytes(df: DataFrame): BigInt =
-    df.queryExecution.optimizedPlan.stats.sizeInBytes
-
-  /** Auto path: broadcast the PROVABLY small side — plan-statistics
-    * prefilter, then an exact count of the candidate side(s) (one cheap
-    * aggregate job each) — else binned. The decision is eager (runs the
-    * count jobs at plan-construction time), like the reference's
-    * index-vs-scan choice at query open (intersect.rs:104-133).
+  /** Auto path: broadcast the PROVABLY small side, else binned. Sides
+    * whose plan statistics fit [[BroadcastBuild.MaxPlanBytes]] are tried
+    * cheapest first (plan bytes are what a broadcast costs); each try is
+    * ONE job that collects at most [[BroadcastBuild.MaxRows]] + 1 rows of
+    * that side, and a side within the cap becomes the build side from
+    * those very rows. Either side may be built: a probe-side build streams
+    * the features with zero shuffle. The decision is eager (its collect
+    * runs at plan-construction time), like the reference's index-vs-scan
+    * choice at query open (intersect.rs:104-133).
     */
   def join(probes: DataFrame, feats: DataFrame, mode: OverlapMode = Overlap,
       binSize: Long = 8192L): DataFrame = {
-    val pBytes = planBytes(probes)
-    val fBytes = planBytes(feats)
-    val pSmall = pBytes <= BroadcastMaxPlanBytes
-    val fSmall = fBytes <= BroadcastMaxPlanBytes
-    if (!pSmall && !fSmall) binnedJoin(probes, feats, mode, binSize)
-    else {
-      // Build-side choice by plan-stats BYTES (what a broadcast actually
-      // costs), cap-checked by ONE bounded count job on the chosen side.
-      // r6 (guide §1.2): the old path ran an exact count() job on EVERY
-      // stats-small side — for the q35 re-check join that re-executed the
-      // matched-rows join once per decision, ~1-3 s of pure decision
-      // overhead per query. limit(cap+1) bounds the probe: a side whose
-      // stats lied big stops scanning after cap+1 rows instead of
-      // completing a full count.
-      val candidates = Seq((pSmall, false, pBytes), (fSmall, true, fBytes))
-        .collect { case (true, buildIsFeature, bytes) => (buildIsFeature, bytes) }
-        .sortBy(_._2)
-      val chosen = candidates.iterator.map { case (buildIsFeature, _) =>
-        val side = if (buildIsFeature) feats else probes
-        val capped = side.limit((BroadcastMaxRows + 1).toInt).count()
-        (buildIsFeature, capped <= BroadcastMaxRows)
-      }.collectFirst { case (buildIsFeature, true) => buildIsFeature }
-      chosen match {
-        case Some(buildIsFeature) =>
-          broadcastImpl(prep(probes, "p"), prep(feats, "f"), mode, buildIsFeature)
-        case None => binnedJoin(probes, feats, mode, binSize)
+    val p = prep(probes, "p")
+    val f = prep(feats, "f")
+    val candidates = Seq(false -> probes, true -> feats)
+      .map { case (buildIsFeature, df) => (buildIsFeature, BroadcastBuild.planBytes(df)) }
+      .filter(_._2 <= BroadcastBuild.MaxPlanBytes)
+      .sortBy(_._2)
+    candidates.iterator
+      .flatMap { case (buildIsFeature, _) =>
+        BroadcastBuild.collect(if (buildIsFeature) f else p).map(buildIsFeature -> _)
       }
+      .nextOption() match {
+      case Some((buildIsFeature, rows)) => broadcastImpl(p, f, mode, buildIsFeature, rows)
+      case None => binnedJoin(probes, feats, mode, binSize)
     }
   }
 
@@ -144,18 +124,21 @@ object IntervalJoin {
 
   /** Path 1 — broadcast per-entity interval index of the FEATURE side +
     * probe-side mapPartitions (like the reference's whole-index mmap,
-    * src/utils/tree_index.rs:21-34). Guarded: refuses to collect a side
-    * whose exact row count exceeds the broadcast cap — use [[join]] (auto)
-    * or [[binnedJoin]] for two big sides.
+    * src/utils/tree_index.rs:21-34). Guarded: refuses a feature side of
+    * more than [[BroadcastBuild.MaxRows]] rows (found by the same single
+    * bounded collect that builds it) — use [[join]] (auto) or
+    * [[binnedJoin]] for two big sides.
     */
   def broadcastJoin(probes: DataFrame, feats: DataFrame, mode: OverlapMode): DataFrame = {
-    require(feats.count() <= BroadcastMaxRows,
-      s"broadcast side exceeds $BroadcastMaxRows rows; use binnedJoin/join(auto)")
-    broadcastImpl(prep(probes, "p"), prep(feats, "f"), mode, buildIsFeature = true)
+    val f = prep(feats, "f")
+    val rows = BroadcastBuild.collect(f)
+    require(rows.isDefined,
+      s"broadcast side exceeds ${BroadcastBuild.MaxRows} rows; use binnedJoin/join(auto)")
+    broadcastImpl(prep(probes, "p"), f, mode, buildIsFeature = true, rows.get)
   }
 
-  /** Broadcast body — the build side's row cap was ALREADY verified by the
-    * caller (public entry points re-check; [[join]] reuses its own count).
+  /** Broadcast body over `bRows`, the already collected (and cap-checked)
+    * rows of the build side.
     *
     * r6: runs at the InternalRow level end to end (guide §1.2 per-task
     * work). The old body collected external Rows and streamed the big
@@ -166,16 +149,12 @@ object IntervalJoin {
     * over a JoinedRow — no external Row exists anywhere on the path.
     */
   private def broadcastImpl(p: DataFrame, f: DataFrame, mode: OverlapMode,
-      buildIsFeature: Boolean): DataFrame = {
-    import org.apache.spark.sql.catalyst.InternalRow
+      buildIsFeature: Boolean, bRows: Array[InternalRow]): DataFrame = {
     import org.apache.spark.sql.catalyst.expressions.{BoundReference, JoinedRow, UnsafeProjection}
     val build = if (buildIsFeature) f else p
     val stream = if (buildIsFeature) p else f
     val spark = stream.sparkSession
     val eType = build.schema.fields(0).dataType
-    // toRdd rows may be buffer-reused per partition: copy before collect
-    val bRows: Array[InternalRow] =
-      build.queryExecution.toRdd.map(_.copy()).collect()
     val byEntity: Map[Any, IntervalIndex] =
       bRows.indices.groupBy(i => bRows(i).get(0, eType)).map { case (e, idxs) =>
         e -> IntervalIndex.build(idxs.map(i => (bRows(i).getLong(1), bRows(i).getLong(2), i)).toArray)
@@ -284,7 +263,6 @@ object IntervalJoin {
     // emitted pair. Actives retain COPIES of their payload struct (the
     // sort iterator reuses buffers); emitted rows are copies of one
     // UnsafeProjection over entity + probe payload + feature payload.
-    import org.apache.spark.sql.catalyst.InternalRow
     import org.apache.spark.sql.catalyst.expressions.{BoundReference, GenericInternalRow, JoinedRow, UnsafeProjection}
     val eField = p.schema.fields(0)
     val pW = pStructT.fields.length

@@ -3,9 +3,14 @@ package graft
 import graft.index.{GffOps, IndexBuild}
 import graft.ops.{Closure, Contained, Overlap}
 import graft.sources.GffSource
+import org.apache.spark.TaskContext
+import org.apache.spark.graftaccess.ListenerBusAccess
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
 
-import java.nio.file.Files
+import java.nio.file.{Files, Path, Paths}
 import java.util.regex.Pattern
 
 /** End-to-end index-build + extract/search/intersect over a synthetic GFF
@@ -177,5 +182,167 @@ class GffIndexSpec extends SparkSpec {
     val leaked = spark.sparkContext.getPersistentRDDs.keySet.intersect(during)
     assert(leaked.isEmpty,
       s"closure rounds must not leave cached RDDs after release(): $leaked")
+  }
+
+  // ---- group fetch: each feature row once, the inner join's column order
+
+  /** The columns (and order) of an inner join on root_fid: root_fid first. */
+  private val groupCols = Seq("root_fid", "line_no", "fid", "entity_id", "seqid", "ftype",
+    "start", "end", "id", "parent", "attr", "aid")
+
+  private def assertOnceEach(df: DataFrame, ids: Seq[String]): Unit = {
+    assert(df.columns.toSeq == groupCols)
+    val got = df.select("id").as[String].collect().toSeq
+    assert(got.sorted == ids.sorted, s"each feature row exactly once: $got")
+  }
+
+  private val gene1Group = Seq("gene1", "rna1", "ex1", "ex2")
+
+  test("extract: duplicate names, and two names of one group, return each row once") {
+    assertOnceEach(GffOps.extract(idx, Seq("ex2", "ex2", " ex2 ").toDF("name")), gene1Group)
+    assertOnceEach(GffOps.extract(idx, Seq("ex1", "rna1").toDF("name")), gene1Group)
+  }
+
+  test("intersect: two regions hitting one root return each row once (plain and invert)") {
+    val regions = Seq((0L, 100L, 150L), (0L, 300L, 350L)).toDF("entity_id", "start", "end")
+    assertOnceEach(GffOps.intersect(idx, regions, Overlap), gene1Group)
+    // both regions overlap gene1's [99,500) without containing it
+    assertOnceEach(GffOps.intersect(idx, regions, Contained, invert = true), gene1Group)
+  }
+
+  test("searchRegex: one regex matching two attrs of one group returns each row once") {
+    val gff2 =
+      """chrA	src	gene	10	90	.	+	.	ID=gA;gene_name=kappa1
+        |chrA	src	mRNA	10	90	.	+	.	ID=rA;Parent=gA;gene_name=kappa2
+        |chrA	src	exon	10	40	.	+	.	ID=eA;Parent=rA
+        |chrA	src	gene	200	300	.	+	.	ID=gB;gene_name=lambda
+        |""".stripMargin
+    val f = Files.createTempDirectory("gff2").resolve("two_attrs.gff")
+    Files.write(f, gff2.getBytes("UTF-8"))
+    val t = IndexBuild.build(GffSource.parse(spark, f.toString))
+    assert(t.attrDict.where(col("attr").rlike("^kappa")).count() == 2)
+    assertOnceEach(GffOps.searchRegex(t, Seq("^kappa")), Seq("gA", "rA", "eA"))
+  }
+
+  // ---- persisted index: round trip, fail-fast load, job budget
+
+  private lazy val indexDir: String = {
+    val d = Files.createTempDirectory("gffidx").resolve("index").toString
+    IndexBuild.write(idx, d)
+    d
+  }
+  private lazy val loaded = IndexBuild.load(spark, indexDir)
+
+  private def tables(t: IndexBuild.IndexTables) =
+    Seq(t.features, t.entityDict, t.attrDict, t.groupExtents, t.intervals)
+
+  test("write -> load round trip: every loaded table equals the built one") {
+    for ((name, (built, back)) <- IndexBuild.TableNames.zip(tables(idx).zip(tables(loaded)))) {
+      assert(back.schema.map(f => f.name -> f.dataType) == built.schema.map(f => f.name -> f.dataType),
+        name)
+      def rows(df: DataFrame) = df.collect().map(_.toSeq).toSeq.sortBy(_.mkString("\u0001"))
+      assert(rows(back) == rows(built), name)
+    }
+    // dictionaries within the broadcast cap are served from the driver
+    for (d <- Seq(loaded.entityDict, loaded.attrDict))
+      assert(d.queryExecution.analyzed.isInstanceOf[LocalRelation])
+  }
+
+  private def copyIndex(skip: String): String = {
+    val to = Files.createTempDirectory("gffidx_copy")
+    val from = Paths.get(indexDir)
+    Files.walk(from).forEach { (p: Path) =>
+      val rel = from.relativize(p)
+      if (!rel.toString.startsWith(skip)) {
+        val dst = to.resolve(rel.toString)
+        if (Files.isDirectory(p)) Files.createDirectories(dst) else Files.copy(p, dst)
+      }
+    }
+    to.toString
+  }
+
+  private def loadError(dir: String): String =
+    intercept[IllegalArgumentException](IndexBuild.load(spark, dir)).getMessage
+
+  test("load fails fast naming the dir: manifest missing") {
+    val d = copyIndex(skip = "manifest.json")
+    val msg = loadError(d)
+    assert(msg.contains(d) && msg.contains("manifest.json"), msg)
+  }
+
+  test("load fails fast naming the dir: manifest malformed") {
+    val d = copyIndex(skip = "manifest.json")
+    Files.write(Paths.get(s"$d/manifest.json"), """{"features":12,""".getBytes("UTF-8"))
+    val msg = loadError(d)
+    assert(msg.contains(d) && msg.contains("manifest.json"), msg)
+    // well-formed JSON without a count for every table
+    Files.write(Paths.get(s"$d/manifest.json"), """{"features":12}""".getBytes("UTF-8"))
+    val msg2 = loadError(d)
+    assert(msg2.contains(d) && msg2.contains("entity_dict"), msg2)
+  }
+
+  test("load fails fast naming the dir and the table: a listed table is absent") {
+    val d = copyIndex(skip = "attr_dict")
+    val msg = loadError(d)
+    assert(msg.contains(d) && msg.contains("attr_dict"), msg)
+  }
+
+  test("write: the first failed table write cancels the others and rethrows within seconds") {
+    // a write that would run for two minutes unless its job is cancelled
+    val slowUdf = udf { (i: Long) =>
+      val ctx = TaskContext.get()
+      val t0 = System.nanoTime()
+      while (!ctx.isInterrupted() && System.nanoTime() - t0 < 120L * 1000000000L) Thread.sleep(20)
+      i
+    }
+    val failUdf = udf { (i: Long) =>
+      Thread.sleep(500)
+      if (i >= 0) throw new IllegalStateException("injected table write failure")
+      i
+    }
+    val slow = spark.range(0, 2, 1, 2).select(slowUdf(col("id")).as("id"))
+    val failing = spark.range(0, 1, 1, 1).select(failUdf(col("id")).as("id"))
+    val d = Files.createTempDirectory("gffidx_fail").resolve("index").toString
+    val t0 = System.nanoTime()
+    val e = intercept[Exception](IndexBuild.write(
+      idx.copy(features = slow, attrDict = failing), d))
+    val waited = (System.nanoTime() - t0) / 1e9
+    assert(waited < 30, s"rethrown after $waited s")
+    assert(Iterator.iterate(e: Throwable)(_.getCause).takeWhile(_ != null)
+      .exists(c => String.valueOf(c.getMessage).contains("injected table write failure")), e)
+    assert(!Files.exists(Paths.get(s"$d/manifest.json")), "no manifest after a failed write")
+    // the other writes were cancelled and have unwound: no job of this
+    // write is running, and none starts after it has thrown
+    val sc = spark.sparkContext
+    ListenerBusAccess.waitUntilEmpty(sc)
+    assert(sc.statusTracker.getActiveJobIds().isEmpty, "writes still running")
+    assert(jobsOf(Thread.sleep(1000)) == 0, "a write started a job after write() threw")
+  }
+
+  /** Spark jobs started while `body` runs, `body` included its plan-time
+    * (eager) jobs. */
+  private def jobsOf(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val n = new java.util.concurrent.atomic.AtomicInteger()
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = n.incrementAndGet()
+    }
+    ListenerBusAccess.waitUntilEmpty(sc)
+    sc.addSparkListener(l)
+    try { body; ListenerBusAccess.waitUntilEmpty(sc) } finally sc.removeSparkListener(l)
+    n.get
+  }
+
+  test("job budget: lookups on the loaded index, each forced by count()") {
+    val t = loaded // built, written and loaded before any job is counted
+    // extract/searchRegex: broadcast of the names (aids), broadcast of the
+    // roots (a semi-join, no distinct stage), count's two stages.
+    // intersect: ONE bounded collect decides and builds the region side;
+    // AQE then plans the semi-join on the unbounded roots at run time.
+    // Distinct + inner join fetches and count-then-collect decisions ran 5, 5 and 7.
+    assert(jobsOf(GffOps.extract(t, Seq("ex2").toDF("name")).count()) == 4)
+    assert(jobsOf(GffOps.searchRegex(t, Seq("^alpha$")).count()) == 4)
+    assert(jobsOf(GffOps.intersect(t, Seq((0L, 150L, 350L)).toDF("entity_id", "start", "end"),
+      Overlap).count()) == 6)
   }
 }

@@ -31,6 +31,10 @@ class IntervalJoinSpec extends SparkSpec {
     probesLocal.toDF("probe_id", "entity", "start", "end")
 
   private def bruteForce(mode: OverlapMode): Set[(Long, Long)] =
+    bruteForce(mode, probesLocal, featsLocal)
+
+  private def bruteForce(mode: OverlapMode, probesLocal: Seq[(Long, String, Long, Long)],
+      featsLocal: Seq[(String, Long, Long, Long)]): Set[(Long, Long)] =
     (for {
       (pe, pid, ps, pend) <- probesLocal.map(p => (p._2, p._1, p._3, p._4))
       (fe, fs, fend, fid) <- featsLocal
@@ -56,6 +60,31 @@ class IntervalJoinSpec extends SparkSpec {
     }
     test(s"sweep path == brute force [$m]") {
       assert(pairs(IntervalJoin.sweepJoin(probes, feats, mode)) == bruteForce(mode))
+    }
+  }
+
+  // join (auto) builds the side with fewer plan bytes: 100 rows against
+  // the other side's 200/300 decides which one
+  private val fewProbes = probesLocal.take(100)
+  private val fewFeats = featsLocal.take(100)
+
+  private def assertBroadcast(j: DataFrame, want: Set[(Long, Long)]): Unit = {
+    assert(!j.queryExecution.executedPlan.toString.contains("SortMergeJoin"),
+      "small sides take the broadcast path, not the binned join")
+    assert(pairs(j) == want)
+  }
+
+  for (mode <- Seq(Overlap, Contained, ContainsRegion)) {
+    val m = mode.toString
+    test(s"auto path, probe side built == brute force [$m]") {
+      val p = fewProbes.toDF("probe_id", "entity", "start", "end")
+      assert(BroadcastBuild.planBytes(p) < BroadcastBuild.planBytes(feats))
+      assertBroadcast(IntervalJoin.join(p, feats, mode), bruteForce(mode, fewProbes, featsLocal))
+    }
+    test(s"auto path, feature side built == brute force [$m]") {
+      val f = fewFeats.toDF("entity", "start", "end", "fid")
+      assert(BroadcastBuild.planBytes(f) < BroadcastBuild.planBytes(probes))
+      assertBroadcast(IntervalJoin.join(probes, f, mode), bruteForce(mode, probesLocal, fewFeats))
     }
   }
 
